@@ -85,12 +85,8 @@ object Readers {
         def visible(p: org.apache.hadoop.fs.Path): Boolean =
           rootUri.relativize(p.toUri).getPath
             .split('/').forall(c => !c.startsWith("_") && !c.startsWith("."))
-        val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.Path]
-        val it = fs.listFiles(new org.apache.hadoop.fs.Path(root), true)
-        while (it.hasNext) {
-          val f = it.next()
-          if (filter.accept(f.getPath) && visible(f.getPath)) files += f.getPath
-        }
+        val files = PathModel.walkFiles(fs, new org.apache.hadoop.fs.Path(root))
+          .map(_.getPath).filter(p => filter.accept(p) && visible(p)).toSeq
         // With skipCorrupt, a corrupt file in the sample wouldn't fail
         // inference — it would silently REMOVE its directory's schema
         // contribution and the full scan would then bind that

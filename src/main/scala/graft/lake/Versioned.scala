@@ -748,23 +748,20 @@ object Versioned {
   private def listDataFilesWithLen(fs: FileSystem, root: Path,
       sub: Path): Seq[(String, Long)] = {
     if (!fs.exists(sub)) return Nil
-    val it = fs.listFiles(sub, true)
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     val rootUri = root.toUri.getPath.stripSuffix("/")
-    while (it.hasNext) {
-      val st = it.next()
-      val f = st.getPath
-      val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-      val segs = rel.split('/')
-      if (f.getName.endsWith(".parquet") &&
-          !segs.exists(s => s.startsWith("_") || s.startsWith(".")))
-        buf += ((rel, st.getLen))
-    }
-    buf.sortBy(_._1).toSeq
+    PathModel.walkFiles(fs, sub).map { st =>
+      (st.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"), st.getLen)
+    }.filter { case (rel, _) => PathModel.isDataParquet(rel) }.toSeq.sortBy(_._1)
   }
 
   private def listDataFiles(fs: FileSystem, root: Path, sub: Path): Seq[String] =
     listDataFilesWithLen(fs, root, sub).map(_._1)
+
+  /** The parquet files a staging write left directly in `dir/rel`, as
+    * `rel/<name>` — the form the manifest records. */
+  private def stagedParquet(fs: FileSystem, dir: String, rel: String): Seq[String] =
+    PathModel.walkFiles(fs, new Path(dir, rel), recursive = false)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).map(n => s"$rel/$n").toSeq
 
   // ---- manifest-recorded file sizes (`#bytes` trailing lines) ------
   // Writers KNOW each staged file's size at commit time (the staging
@@ -2442,19 +2439,10 @@ object Versioned {
       if (!fs.exists(root)) return None
       val budget = footerLocalMaxFiles(spark)
       val rootUri = root.toUri.getPath.stripSuffix("/")
-      val it = fs.listFiles(root, true)
-      val parts = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val f = it.next().getPath
-        val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-        val segs = rel.split('/')
-        if (f.getName.endsWith(".parquet") &&
-            !segs.exists(s => s.startsWith("_") || s.startsWith("."))) {
-          parts += f
-          if (parts.size > budget) return None
-        }
-      }
-      uniformSchemaLocal(spark, parts.toSeq)
+      val parts = PathModel.walkFiles(fs, root).map(_.getPath).filter { f =>
+        PathModel.isDataParquet(f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"))
+      }.take(budget + 1).toSeq
+      if (parts.size > budget) None else uniformSchemaLocal(spark, parts)
     } catch { case scala.util.control.NonFatal(_) => None }
 
   private def anchorDf(spark: SparkSession, dir: String,
@@ -4561,8 +4549,10 @@ object Versioned {
 
   /** Diagnostic counter: aggregates SERVED metadata-only (the SQL
     * pushdown and the library path both bump it) — the oracle leg
-    * pins it against `sizeStatProbes`-style zero-scan expectations. */
-  @volatile var metadataAggServed: Long = 0L
+    * pins it against `sizeStatProbes`-style zero-scan expectations.
+    * Atomic: concurrent queries each count. */
+  def metadataAggServed: Long = metadataAggServedCount.get()
+  private val metadataAggServedCount = new java.util.concurrent.atomic.AtomicLong()
 
   /** Answers `aggs` at `version` from the manifest + stats sidecars,
     * or None when ANY guard fails — the caller must then aggregate
@@ -4620,7 +4610,7 @@ object Versioned {
       if (live.isEmpty) {
         // zero-file table: count(*) = 0 is exact; min/max are NULL —
         // served here so an empty table's dashboard stays zero-scan
-        metadataAggServed += 1
+        metadataAggServedCount.incrementAndGet()
         return Some(aggs.map {
           case MetaCount => 0L
           case MetaCountCol(_) => 0L
@@ -4715,7 +4705,7 @@ object Versioned {
       }
       if (out.exists(_.isEmpty)) None
       else {
-        metadataAggServed += 1
+        metadataAggServedCount.incrementAndGet()
         Some(out.map(_.get))
       }
     } catch { case _: IllegalArgumentException => None } // coverage bail
@@ -4755,7 +4745,7 @@ object Versioned {
       val needCol = aggs.exists { case MetaCount => false; case _ => true }
       if (dvEs.nonEmpty && needCol) return None
       val liveAll = filesAt(spark, dir, v)
-      if (liveAll.isEmpty) return { metadataAggServed += 1; Some(Nil) }
+      if (liveAll.isEmpty) return { metadataAggServedCount.incrementAndGet(); Some(Nil) }
       val parsed: Seq[(String, Map[String, String])] = liveAll.map { r =>
         r -> refRel(r).split('/').dropRight(1)
           .filter(_.contains('=')).map { seg =>
@@ -4777,7 +4767,7 @@ object Versioned {
         return None
       val live = parsed.collect { case (r, pv) if partitionPred.forall {
         case (k, vs) => vs.contains(pv(k)) } => (r, pv) }
-      if (live.isEmpty) { metadataAggServed += 1; return Some(Nil) }
+      if (live.isEmpty) { metadataAggServedCount.incrementAndGet(); return Some(Nil) }
       val renames = metaAt(spark, dir, v).renames
       val cols = aggs.collect {
         case MetaCountCol(c) => c
@@ -4907,7 +4897,7 @@ object Versioned {
           Some((g.split(sep, -1).toSeq, vals.map(_.get)))
         }
       }.toSeq
-      metadataAggServed += 1
+      metadataAggServedCount.incrementAndGet()
       Some(out)
     } catch { case _: IllegalArgumentException => None } // coverage bail
   }
@@ -5181,19 +5171,14 @@ object Versioned {
     // (guide §2.4; the append/merge staged-write discipline).
     toPhysical(meta0, keys).coalesce(1)
       .write.mode("errorifexists").parquet(s"$dir/$delRel")
-    val it = fs.listFiles(new Path(dir, delRel), false)
-    val delFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next().getPath.getName
-      if (f.endsWith(".parquet")) delFiles += s"$delRel/$f"
-    }
+    val delFiles = stagedParquet(fs, dir, delRel)
     // zero files from a "successful" staging write is an FS/committer
     // fault, never a no-match (coalesce(1) guarantees one file on a
     // healthy write) — fail LOUDLY rather than silently skip a delete;
     // the footer count alone distinguishes matched vs no-match
     require(delFiles.nonEmpty,
       s"deleteWhere staging write produced no parquet files under $delRel")
-    if (countFooterRows(spark, delFiles.map(r => s"$dir/$r").toSeq) == 0L) {
+    if (countFooterRows(spark, delFiles.map(r => s"$dir/$r")) == 0L) {
       // nothing matched: drop the schema-only staging file. Replay
       // after a crash between a prior commit and its promote: the keys
       // already read as deleted, but the increment may still be
@@ -5597,18 +5582,13 @@ object Versioned {
       hits.select(col(fileCol).as(DvFileCol),
           col(DvSrcPos).cast("long").as(DvPosCol))
         .write.mode("errorifexists").parquet(s"$dir/$dvRel")
-      val it = fs.listFiles(new Path(dir, dvRel), false)
-      val dvFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath.getName
-        if (f.endsWith(".parquet")) dvFiles += s"$dvRel/$f"
-      }
+      val dvFiles = stagedParquet(fs, dir, dvRel)
       // zero files from a "successful" staging write is an
       // FS/committer fault, never a no-match (an empty unpartitioned
       // write stages one schema-only file) — fail loudly
       require(dvFiles.nonEmpty,
         s"updateWhereVectors staging write produced no parquet files under $dvRel")
-      if (countFooterRows(spark, dvFiles.map(r => s"$dir/$r").toSeq) == 0L) {
+      if (countFooterRows(spark, dvFiles.map(r => s"$dir/$r")) == 0L) {
         fs.delete(new Path(dir, dvRel), true)
         return v // no row matched: no-op, no commit
       }
@@ -5741,18 +5721,13 @@ object Versioned {
       hits.select(col(fileCol).as(DvFileCol),
           col(DvSrcPos).cast("long").as(DvPosCol))
         .write.mode("errorifexists").parquet(s"$dir/$dvRel")
-      val it = fs.listFiles(new Path(dir, dvRel), false)
-      val dvFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (it.hasNext) {
-        val f = it.next().getPath.getName
-        if (f.endsWith(".parquet")) dvFiles += s"$dvRel/$f"
-      }
+      val dvFiles = stagedParquet(fs, dir, dvRel)
       // zero files from a "successful" staging write is an
       // FS/committer fault, never a no-match (an empty unpartitioned
       // write stages one schema-only file) — fail loudly
       require(dvFiles.nonEmpty,
         s"deleteWhereVectors staging write produced no parquet files under $dvRel")
-      if (countFooterRows(spark, dvFiles.map(r => s"$dir/$r").toSeq) == 0L) {
+      if (countFooterRows(spark, dvFiles.map(r => s"$dir/$r")) == 0L) {
         fs.delete(new Path(dir, dvRel), true)
         changeFeed.foreach { case (fd, b) =>
           graft.ops.MergeData.promoteFeedIncrement(spark, fd, b) }
@@ -5979,14 +5954,9 @@ object Versioned {
         java.util.UUID.randomUUID().toString.take(8)
       toPhysical(meta0, keys).coalesce(1)
         .write.mode("errorifexists").parquet(s"$dir/$delRel")
-      val delFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-      val it = fs.listFiles(new Path(dir, delRel), false)
-      while (it.hasNext) {
-        val f = it.next().getPath.getName
-        if (f.endsWith(".parquet")) delFiles += s"$delRel/$f"
-      }
+      val delFiles = stagedParquet(fs, dir, delRel)
       if (delFiles.isEmpty ||
-          countFooterRows(spark, delFiles.map(r => s"$dir/$r").toSeq) == 0L) {
+          countFooterRows(spark, delFiles.map(r => s"$dir/$r")) == 0L) {
         fs.delete(new Path(dir, delRel), true)
         require(requirement = false, "mergeIntoMor got an empty batch")
       }
@@ -6208,12 +6178,8 @@ object Versioned {
                   java.util.UUID.randomUUID().toString.take(8)
                 toPhysical(meta0, remaining.distinct()).coalesce(1)
                   .write.mode("errorifexists").parquet(s"$dir/$delRel")
-                val it = fs.listFiles(new Path(dir, delRel), false)
-                while (it.hasNext) {
-                  val f = it.next().getPath.getName
-                  if (f.endsWith(".parquet"))
-                    keptDels += bound.fold(s"$delRel/$f")(b => s"$delRel/$f @$b")
-                }
+                keptDels ++= stagedParquet(fs, dir, delRel)
+                  .map(r => bound.fold(r)(b => s"$r @$b"))
               }
             }
           }
@@ -7059,9 +7025,7 @@ object Versioned {
     val delRoot = new Path(dir, "_deletes")
     if (fs.exists(delRoot)) {
       val rootUri = new Path(dir).toUri.getPath.stripSuffix("/")
-      val it = fs.listFiles(delRoot, true)
-      while (it.hasNext) {
-        val st = it.next()
+      PathModel.walkFiles(fs, delRoot).foreach { st =>
         val f = st.getPath
         val rel = f.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
         // same age gate as the change increments: a tombstone is

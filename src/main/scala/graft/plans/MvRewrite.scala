@@ -8,6 +8,8 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{coalesce, col, count, hll_sketch_agg, lit, max, min, sum}
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -100,6 +102,20 @@ object MaterializedViews {
   def isEmpty: Boolean = registry.isEmpty
   def forBase(normedPath: String): Seq[MvDef] =
     registry.getOrElse(normedPath, Nil)
+
+  private object AqeTree extends AdaptiveSparkPlanHelper
+
+  /** Does `d`'s executed plan hold a file scan rooted at `path` or below
+    * it? Reads the scans' root paths off the plan tree (inside adaptive
+    * plans too), never `executedPlan.toString`, which Spark cuts off at
+    * `spark.sql.maxMetadataStringLength` characters. */
+  def scans(d: DataFrame, path: String): Boolean = {
+    val p = norm(path)
+    AqeTree.collect(d.queryExecution.executedPlan) {
+      case s: FileSourceScanExec => s.relation.location.rootPaths
+    }.flatten.map(r => Path.getPathWithoutSchemeAndAuthority(r).toString)
+      .exists(r => r == p || r.startsWith(p + "/"))
+  }
 
   /** Build (or rebuild) the summary table: one full-scan aggregate of
     * the base — the last time the base needs to be read for any query

@@ -2291,17 +2291,10 @@ object LakeQueries {
               Versioned.mergeInto(s, lake, b1, Seq("event_type"),
                 Seq("event_id"), changeFeed = Some((feedDir, 1L)),
                 commitTs = 3000L)
-              def physicalParquetCount(): Int = {
-                val it = fs.listFiles(
-                  new org.apache.hadoop.fs.Path(lake), true)
-                var n = 0
-                while (it.hasNext) {
-                  val p = it.next().getPath
-                  if (p.getName.endsWith(".parquet") &&
-                      !p.toString.contains("/_")) n += 1
-                }
-                n
-              }
+              def physicalParquetCount(): Int =
+                PathModel.walkFiles(fs, new org.apache.hadoop.fs.Path(lake))
+                  .map(_.getPath).count(p => p.getName.endsWith(".parquet") &&
+                    !p.toString.contains("/_"))
               val physBefore = physicalParquetCount()
               Versioned.restore(s, lake, 1L,
                 changeFeed = Some((feedDir, 2L)),
@@ -2407,16 +2400,10 @@ object LakeQueries {
             require(Versioned.filesAt(s, clone, 0L)
               .forall(Versioned.refIsForeign),
               "a shallow clone's v0 must be entirely foreign refs")
-            def localParquet(): Int = {
-              val it = fs.listFiles(new org.apache.hadoop.fs.Path(clone), true)
-              var n = 0
-              while (it.hasNext) {
-                val p = it.next().getPath
-                if (p.getName.endsWith(".parquet") &&
-                    !p.toString.contains("/_")) n += 1
-              }
-              n
-            }
+            def localParquet(): Int =
+              PathModel.walkFiles(fs, new org.apache.hadoop.fs.Path(clone))
+                .map(_.getPath).count(p => p.getName.endsWith(".parquet") &&
+                  !p.toString.contains("/_"))
             require(localParquet() == 0,
               "a shallow clone must copy zero data files")
             val base = graft.Tables(s, dir, "events")
@@ -5067,14 +5054,10 @@ object LakeQueries {
             .filter(col("event_type").isin("click", "view"))
           // a PLAIN parquet lake — written by vanilla Spark, no manifest
           base.write.partitionBy("event_type").parquet(lake)
-          def files(p: String): Set[String] = {
-            val it = fs.listFiles(new org.apache.hadoop.fs.Path(lake), true)
-            val b = Set.newBuilder[String]
-            while (it.hasNext) { val f = it.next().getPath
-              if (f.getName.endsWith(".parquet") &&
-                  f.toString.contains(s"event_type=$p/")) b += f.toString }
-            b.result()
-          }
+          def files(p: String): Set[String] =
+            PathModel.walkFiles(fs, new org.apache.hadoop.fs.Path(lake))
+              .map(_.getPath.toString).filter(f => f.endsWith(".parquet") &&
+                f.contains(s"event_type=$p/")).toSet
           val clickBefore = files("click")
           val viewBefore = files("view")
           val m = sqlMaint(s, s"CONVERT TO GRAFT gsql.`$lake` " +

@@ -68,11 +68,12 @@ object MvQueries {
   /** Fail loudly unless the physical plan reads ONLY the summary. */
   private def requireMvScan(d: DataFrame, mvPath: String,
       basePath: String): DataFrame = {
-    val plan = d.queryExecution.executedPlan.toString
-    require(plan.contains(mvPath),
-      s"MV rewrite did not fire — plan does not scan $mvPath:\n$plan")
-    require(!plan.contains(basePath),
-      s"MV rewrite left a base scan of $basePath in the plan:\n$plan")
+    require(MaterializedViews.scans(d, mvPath),
+      s"MV rewrite did not fire — plan does not scan $mvPath:\n" +
+        d.queryExecution.executedPlan)
+    require(!MaterializedViews.scans(d, basePath),
+      s"MV rewrite left a base scan of $basePath in the plan:\n" +
+        d.queryExecution.executedPlan)
     d
   }
 

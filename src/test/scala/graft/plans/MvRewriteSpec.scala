@@ -46,12 +46,10 @@ class MvRewriteSpec extends SparkSpec {
     try f finally deregister(basePath)
   }
 
-  private def usesMv(d: DataFrame): Boolean = {
-    val plan = d.queryExecution.executedPlan.toString
-    plan.contains(mvPath) && !plan.contains(basePath)
-  }
-  private def usesBase(d: DataFrame): Boolean =
-    d.queryExecution.executedPlan.toString.contains(basePath)
+  // plan-tree checks: `executedPlan.toString` truncates scan locations
+  private def usesMv(d: DataFrame): Boolean =
+    scans(d, mvPath) && !scans(d, basePath)
+  private def usesBase(d: DataFrame): Boolean = scans(d, basePath)
 
   test("sum/count/min/max rewrite to the summary with identical results") {
     val q = () => base.groupBy("k", "g").agg(
@@ -189,11 +187,11 @@ class MvRewriteSpec extends SparkSpec {
     register(coarse)
     register(mvDef) // fine-grained fallback, registered second
     try {
-      val fplan = fineQ().queryExecution.executedPlan.toString
-      assert(fplan.contains(mvPath), fplan) // coarse declined, fine served
+      // coarse declined, fine served
+      assert(scans(fineQ(), mvPath), fineQ().queryExecution.executedPlan)
       assert(rowsOf(fineQ()) === expFine)
-      val kplan = byKQ().queryExecution.executedPlan.toString
-      assert(kplan.contains(coarsePath), kplan) // preference order: coarse first
+      // preference order: coarse first
+      assert(scans(byKQ(), coarsePath), byKQ().queryExecution.executedPlan)
       assert(rowsOf(byKQ()) === expByK)
     } finally deregister(basePath)
   }
@@ -211,8 +209,8 @@ class MvRewriteSpec extends SparkSpec {
     graft.GraftExtensions.register(spark)
     register(d)
     try {
-      val plan = q().queryExecution.executedPlan.toString
-      assert(plan.contains(hllPath) && !plan.contains(basePath), plan)
+      assert(scans(q(), hllPath) && !scans(q(), basePath),
+        q().queryExecution.executedPlan)
       assert(rowsOf(q()) === expected)
       // a different lgK must NOT be served by the stored sketch
       val other = base.groupBy("k")
@@ -257,8 +255,7 @@ class MvRewriteSpec extends SparkSpec {
     try {
       val q = spark.read.parquet(lakeDir).groupBy("k")
         .agg(sum("v").as("s"), count(lit(1)).as("n")).orderBy("k")
-      val plan = q.queryExecution.executedPlan.toString
-      assert(plan.contains(mv3Dir) && !plan.contains(lakeDir), plan)
+      assert(scans(q, mv3Dir) && !scans(q, lakeDir), q.queryExecution.executedPlan)
       assert(rowsOf(q) === Seq(Seq("a", 33L, 2L), Seq("b", 52L, 2L)))
     } finally deregister(lakeDir)
   }
